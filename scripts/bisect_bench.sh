@@ -4,7 +4,7 @@
 # same box, never concurrently). Box-state drift has confounded recorded
 # round-over-round tails twice; this writes the comparison that cannot be
 # confounded into bench_bisect.json at the repo root, which graft.Bench
-# embeds (with a HEAD-commit staleness flag) as the "bisect" field of its
+# embeds (with a source-digest staleness flag) as the "bisect" field of its
 # output line — so the per-round BENCH artifact carries the box-immune
 # ratio.
 #

@@ -1,17 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
-  import scala.jdk.CollectionConverters._
-
   /** The checkout root this bench run measures: SPARK_GRAFT_REPO_ROOT if
     * set, else the nearest ancestor of the CWD holding a build.sbt, else
-    * the CWD. The durable artifacts (bench_results.json, the .git/src
-    * digests) anchor HERE — a bench launched from a subdirectory must not
-    * silently write the canonical record somewhere else or read a foreign
-    * .git. (A bisect worktree resolves to ITS OWN root — correct: its
-    * digest must describe the code it ran.) */
+    * the CWD. The durable artifacts (bench_results.json, the src digest)
+    * anchor HERE — a bench launched from a subdirectory must not silently
+    * write the canonical record somewhere else or hash a foreign tree. (A
+    * bisect worktree resolves to ITS OWN root — correct: its digest must
+    * describe the code it ran.) */
   private val repoRoot: java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
     sys.env.get("SPARK_GRAFT_REPO_ROOT")
@@ -23,37 +19,10 @@ object Bench {
     }
   }
 
-  /** Current git HEAD commit, read straight from .git (no subprocess):
-    * used to mark an embedded bench_bisect.json as stale when it was
-    * produced at a different commit. */
-  private def gitHead(): Option[String] = try {
-    import java.nio.file.{Files, Paths}
-    val head = new String(
-      Files.readAllBytes(repoRoot.resolve(".git").resolve("HEAD")),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    if (!head.startsWith("ref: ")) Some(head)
-    else {
-      val ref = head.drop(5)
-      val refPath = repoRoot.resolve(".git").resolve(ref)
-      if (Files.isRegularFile(refPath))
-        Some(new String(Files.readAllBytes(refPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      else {
-        val packed = repoRoot.resolve(".git").resolve("packed-refs")
-        if (!Files.isRegularFile(packed)) None
-        else Files.readAllLines(packed).asScala
-          .find(l => !l.startsWith("#") && l.endsWith(" " + ref))
-          .map(_.split(' ')(0))
-      }
-    }
-  } catch { case _: Exception => None }
-
   /** SHA-256 over src/main's .scala files (sorted relative paths + bytes)
-    * — the EXACT "is the benched code the same" question. The commit
-    * comparison alone cries wolf when the only commit since the bisect is
-    * the bisect artifact itself; the digest is immune to artifact-only
-    * and test-only commits. Must mirror scripts/bisect_bench.sh's
-    * src_digest computation byte-for-byte. */
+    * — the EXACT "is the benched code the same" question, immune to
+    * artifact-only and test-only commits. Must mirror
+    * scripts/bisect_bench.sh's src_digest computation byte-for-byte. */
   private def srcDigest(): Option[String] = try {
     import java.nio.file.Files
     val base = repoRoot.resolve("src").resolve("main")
@@ -78,61 +47,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // measured at sf0.1 on a 32-cpu box: 8 threads beats 4/16/32 (per-task
-    // rows are small enough that scheduling overhead dominates above 8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep AQE's parallelism-first coalescing from SERIALIZING small
-      // CPU-bound stages: the default 1 MB minPartitionSize floor wins
-      // over the bytes/parallelism target on metadata-scale shuffles and
-      // collapses window/sort/write stages to a handful of tasks; a 64k
-      // floor still merges crumb partitions while the scale-adaptive
-      // bytes/parallelism target governs real data (unchanged at scale)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // small-reduce-side SQL shuffles route to the Tungsten serialized
-      // shuffle writer (ONE output file per map task) instead of the
-      // bypass-merge writer (numPartitions files per map task + an NIO
-      // concat): stack sampling showed shuffle-file creation as the top
-      // runnable frame across the lake/index write paths
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // let AQE re-plan (coalesce) the output partitioning of CACHED
-      // plans too: the engine pins hot intermediates (tag joins, shingle
-      // frames), and without this every consumer of a cached frame
-      // inherits the raw shuffle partition count however tiny the data —
-      // scale-adaptive everywhere, not a local-mode tune
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE posts a SparkListenerSQLAdaptiveExecutionUpdate with a full
-      // explainString on EVERY replan; at many stages per query the
-      // default "formatted" mode makes plan stringification a measurable
-      // driver cost (~1/4 of RUNNABLE driver samples on the lake write
-      // paths). "simple" keeps the event, drops the expensive rendering —
-      // pure driver-overhead reduction, scale-independent.
-      .config("spark.sql.ui.explainMode", "simple")
-      // the generated-class cache (CodeGenerator.cache) holds only 100
-      // entries by default; a 125-query sweep churns ~10 codegen units per
-      // query, so every pass recompiles nearly every plan fragment through
-      // janino (RUNNABLE janino/deflate frames in driver sampling; queries
-      // measure ~2x slower inside the full sweep than isolated). 4096
-      // entries keeps the whole sweep resident — steady-state compile
-      // behavior any long-lived production driver already has.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // in-process permission ops for file:// — without the hadoop native
-      // lib, stock RawLocalFileSystem FORKS `chmod` once per created
-      // dir/file (measured: thousands of ~10 ms forks per many-file staged
-      // write); same permission bits via java.nio, no subprocess
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     // JIT/codegen warmup at the smallest SF so timed numbers reflect the
     // steady state, not first-query compilation
     // SPARK_GRAFT_ONLY=q1,q2 times just those queries — the iteration loop
@@ -207,21 +122,14 @@ object Bench {
         // by log capture and the lake_* timings at the end must survive
         val n = graft.table.Json.mapper.readTree(java.nio.file.Files.readAllBytes(p))
         // staleness guard: a committed bisect from a PREVIOUS round must
-        // not read as current. Primary check: the SOURCE DIGEST the
-        // bisect recorded vs the running tree's (immune to artifact-only
-        // commits like committing the bisect json itself); fallback for
-        // older artifacts without a digest: commit comparison.
-        val recordedHead = n.path("head_commit").asText
-        val recordedDigest = n.path("src_digest").asText("")
-        val stale = (recordedDigest, srcDigest()) match {
-          case (rec, Some(cur)) if rec.nonEmpty =>
-            if (rec == cur) "false" else "true"
-          case _ => gitHead() match {
-            case Some(cur) if recordedHead.nonEmpty =>
-              if (cur.startsWith(recordedHead) || recordedHead.startsWith(cur))
-                "false" else "true"
-            case _ => "null" // undeterminable: flag as unknown
-          }
+        // not read as current. The SOURCE DIGEST the bisect recorded vs
+        // the running tree's (immune to artifact-only commits like
+        // committing the bisect json itself); no digest on either side is
+        // undeterminable, flagged as unknown.
+        val recorded = n.path("src_digest").asText("")
+        val stale = srcDigest() match {
+          case Some(cur) if recorded.nonEmpty => (recorded != cur).toString
+          case _ => "null"
         }
         // compact scaling summary (scripts/scaling_bench.sh): factor + the
         // worst per-query time ratio — the super-linear-plan detector; full
@@ -233,7 +141,7 @@ object Bench {
             s""""max_ratio":${sc.path("max_ratio").asText("null")},""" +
             s""""max_query":"${sc.path("max_query").asText("")}"},"""
         s""""bisect":{"baseline_commit":"${n.path("baseline_commit").asText}",""" +
-          s""""head_commit":"$recordedHead",""" +
+          s""""head_commit":"${n.path("head_commit").asText}",""" +
           s""""stale":$stale,""" +
           s""""ratio":${n.path("ratio").asText("null")},""" +
           s""""head_total_sec":${n.path("head_total_sec").asText("0")},""" +

@@ -2,17 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: time a subset of SparkEntry queries by name (same session
-  * config as Bench) — `runMain graft.BenchOne lake_sql_merge q1_...`.
-  * Warmup at sf0.001, then SPARK_GRAFT_BENCH_PASSES sweeps at
-  * SPARK_GRAFT_SF_DIR, min per query, one line each. */
-object BenchOne {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+/** The one session regime: Bench, Verify, ScaleUp, ProfileOne and the tests
+  * all run the engine under these settings. */
+object GraftSession {
+  /** @param cores local threads and shuffle partitions: SPARK_GRAFT_CPUS,
+    *   default 8 — measured at sf0.1 on a 32-cpu box, 8 threads beats
+    *   4/16/32 (per-task rows are small enough that scheduling overhead
+    *   dominates above 8)
+    * @param warehouse root of the `graft` catalog's tables */
+  def start(
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
+      warehouse: String =
+        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse"
+  ): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       // keep AQE's parallelism-first coalescing from SERIALIZING small
       // CPU-bound stages: the default 1 MB minPartitionSize floor wins
@@ -21,8 +26,11 @@ object BenchOne {
       // floor still merges crumb partitions while the scale-adaptive
       // bytes/parallelism target governs real data (unchanged at scale)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // Tungsten serialized shuffle for small reduce counts — one output
-      // file per map task instead of numPartitions files (see Bench.scala)
+      // small-reduce-side SQL shuffles route to the Tungsten serialized
+      // shuffle writer (ONE output file per map task) instead of the
+      // bypass-merge writer (numPartitions files per map task + an NIO
+      // concat): stack sampling showed shuffle-file creation as the top
+      // runnable frame across the lake/index write paths
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // let AQE re-plan (coalesce) the output partitioning of CACHED
       // plans too: the engine pins hot intermediates (tag joins, shingle
@@ -54,32 +62,10 @@ object BenchOne {
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.sources.NioLocalFileSystem].getName)
       .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
+      .config("spark.sql.catalog.graft.warehouse", warehouse)
       .withExtensions(new graft.functions.GraftExtensions)
-    // dev A/B hook: SPARK_GRAFT_CONF="k=v;k=v" overrides any config above
-    val spark = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';').toSeq).filter(_.contains('='))
-      .foldLeft(builder0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val picked = args.toSeq.map(n => n -> SparkEntry.queries.getOrElse(n,
-      throw new IllegalArgumentException(s"unknown query $n")))
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    picked.foreach { case (_, fn) => fn(spark, warmDir).count() }
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val times = (1 to passes).map { _ =>
-      picked.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    picked.foreach { case (name, _) =>
-      println(f"$name%-28s ${times.map(_.toMap.apply(name)).min}%.2f s")
-    }
-    spark.stop()
+    spark
   }
 }

@@ -1,70 +1,28 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.graftbridge.BusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
-/** Dev tool: run one SparkEntry query (same session config as Bench) with a
-  * listener that prints every Spark job's wall time, stage task-time and
-  * description — attributes a slow query's seconds to its jobs.
+/** Dev tool: run SparkEntry queries (the GraftSession regime) and print,
+  * per query, its formatted physical plan and a listener's breakdown of
+  * every Spark job's wall time, stage task-time and description —
+  * attributes a slow query's seconds to its jobs.
   * `runMain graft.ProfileOne lake_upsert_snapshot` (SPARK_GRAFT_SF_DIR
   * selects the data dir, default sf0.1; first run is warmup at sf0.001,
-  * second is the reported one). */
+  * second absorbs sf-shape codegen, third is the reported one). */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep AQE's parallelism-first coalescing from SERIALIZING small
-      // CPU-bound stages: the default 1 MB minPartitionSize floor wins
-      // over the bytes/parallelism target on metadata-scale shuffles and
-      // collapses window/sort/write stages to a handful of tasks; a 64k
-      // floor still merges crumb partitions while the scale-adaptive
-      // bytes/parallelism target governs real data (unchanged at scale)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // small-reduce-side SQL shuffles route to the Tungsten serialized
-      // shuffle writer (ONE output file per map task) instead of the
-      // bypass-merge writer (numPartitions files per map task + an NIO
-      // concat): stack sampling showed shuffle-file creation as the top
-      // runnable frame across the lake/index write paths
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // let AQE re-plan (coalesce) the output partitioning of CACHED
-      // plans too: the engine pins hot intermediates (tag joins, shingle
-      // frames), and without this every consumer of a cached frame
-      // inherits the raw shuffle partition count however tiny the data —
-      // scale-adaptive everywhere, not a local-mode tune
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE posts a SparkListenerSQLAdaptiveExecutionUpdate with a full
-      // explainString on EVERY replan; at many stages per query the
-      // default "formatted" mode makes plan stringification a measurable
-      // driver cost (~1/4 of RUNNABLE driver samples on the lake write
-      // paths). "simple" keeps the event, drops the expensive rendering —
-      // pure driver-overhead reduction, scale-independent.
-      .config("spark.sql.ui.explainMode", "simple")
-      // the generated-class cache (CodeGenerator.cache) holds only 100
-      // entries by default; a 125-query sweep churns ~10 codegen units per
-      // query, so every pass recompiles nearly every plan fragment through
-      // janino (RUNNABLE janino/deflate frames in driver sampling; queries
-      // measure ~2x slower inside the full sweep than isolated). 4096
-      // entries keeps the whole sweep resident — steady-state compile
-      // behavior any long-lived production driver already has.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // in-process permission ops for file:// — without the hadoop native
-      // lib, stock RawLocalFileSystem FORKS `chmod` once per created
-      // dir/file (measured: thousands of ~10 ms forks per many-file staged
-      // write); same permission bits via java.nio, no subprocess
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
+    args.foreach(name => println(report(spark, name, sfDir)))
+    spark.stop()
+  }
+
+  def report(spark: SparkSession, name: String, sfDir: String): String = {
+    val fn = SparkEntry.queries(name)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int)]()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, Int, Double, String)]()
@@ -74,16 +32,18 @@ object ProfileOne {
     // "Spark planning/AQE within an action" vs "between-action work"
     // (timeline I/O, footer reads, collect post-processing)
     val execSpans = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-    val execDone = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double, String)]()
-    var enabled = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    val execDone = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
+    // written by this thread, read by the listener-bus thread; the bus is
+    // drained before each flip so no job straddles the timed run's edges
+    @volatile var enabled = false
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
         if (enabled) e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          case s: SparkListenerSQLExecutionStart =>
             execSpans.put(s.executionId, s.time)
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd =>
+          case s: SparkListenerSQLExecutionEnd =>
             Option(execSpans.get(s.executionId)).foreach { t0 =>
-              execDone.add((s.executionId, (s.time - t0) / 1e3, ""))
+              execDone.add((s.executionId, (s.time - t0) / 1e3))
             }
           case _ =>
         }
@@ -109,41 +69,47 @@ object ProfileOne {
           stages.add((si.stageId, wall, si.numTasks,
             si.taskMetrics.executorRunTime / 1e3, si.name))
         }
-    })
+    }
+    val sc = spark.sparkContext
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    for (name <- args) {
-      val fn = SparkEntry.queries(name)
+    sc.addSparkListener(listener)
+    val (df, rows, wall) = try {
       fn(spark, warmDir).count() // warmup: JIT + codegen
       fn(spark, sfDir).count()   // first sf pass absorbs sf-shape codegen
-      enabled = true; jobs.clear(); done.clear(); stages.clear(); stageTask.set(0)
-      execSpans.clear(); execDone.clear()
+      BusBridge.drain(sc); enabled = true
       val t0 = System.nanoTime()
-      val rows = fn(spark, sfDir).count()
+      val df = fn(spark, sfDir)
+      val rows = df.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      enabled = false
-      println(f"========== $name: $wall%.2f s wall, $rows rows, " +
-        f"${done.size} jobs, ${stageTask.get / 1e3}%.1f s task-time ==========")
-      import scala.jdk.CollectionConverters._
-      val byId = done.asScala.toSeq.sortBy(_._1)
-      val totalJob = byId.map(_._2).sum
-      println(f"  sum(job wall) = $totalJob%.2f s; gap (driver-side) = ${wall - totalJob}%.2f s")
-      val execs = execDone.asScala.toSeq.sortBy(_._1)
-      val totalExec = execs.map(_._2).sum
-      println(f"  ${execs.size} SQL executions, sum(exec wall) = $totalExec%.2f s; " +
-        f"outside-execution gap = ${wall - totalExec}%.2f s; " +
-        f"in-execution non-job = ${totalExec - totalJob}%.2f s (if executions don't nest/overlap)")
-      execs.sortBy(-_._2).take(12).foreach { case (id, sec, nm) =>
-        println(f"  exec $id%4d  $sec%6.3f s  ${nm.take(90)}")
-      }
-      byId.foreach { case (id, sec, desc, nt) =>
-        println(f"  job $id%3d  $sec%6.3f s  $nt%4d tasks  ${desc.take(110)}")
-      }
-      println("  -- slowest stages (wall s / tasks / task-time s / site) --")
-      stages.asScala.toSeq.sortBy(-_._2).take(20).foreach {
-        case (id, wall, nt, tt, nm) =>
-          println(f"  stage $id%4d  $wall%6.3f s  $nt%4d t  $tt%6.1f tt  ${nm.take(100)}")
-      }
+      BusBridge.drain(sc); enabled = false
+      (df, rows, wall)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val out = new StringBuilder
+    def line(s: String): Unit = out ++= s ++= "\n"
+    line(s"========== $name ==========")
+    line(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    line(f"========== $name: $wall%.2f s wall, $rows rows, " +
+      f"${done.size} jobs, ${stageTask.get / 1e3}%.1f s task-time ==========")
+    val byId = done.asScala.toSeq.sortBy(_._1)
+    val totalJob = byId.map(_._2).sum
+    line(f"  sum(job wall) = $totalJob%.2f s; gap (driver-side) = ${wall - totalJob}%.2f s")
+    val execs = execDone.asScala.toSeq.sortBy(_._1)
+    val totalExec = execs.map(_._2).sum
+    line(f"  ${execs.size} SQL executions, sum(exec wall) = $totalExec%.2f s; " +
+      f"outside-execution gap = ${wall - totalExec}%.2f s; " +
+      f"in-execution non-job = ${totalExec - totalJob}%.2f s (if executions don't nest/overlap)")
+    execs.sortBy(-_._2).take(12).foreach { case (id, sec) =>
+      line(f"  exec $id%4d  $sec%6.3f s")
     }
-    spark.stop()
+    byId.foreach { case (id, sec, desc, nt) =>
+      line(f"  job $id%3d  $sec%6.3f s  $nt%4d tasks  ${desc.take(110)}")
+    }
+    line("  -- slowest stages (wall s / tasks / task-time s / site) --")
+    stages.asScala.toSeq.sortBy(-_._2).take(20).foreach {
+      case (id, wall, nt, tt, nm) =>
+        line(f"  stage $id%4d  $wall%6.3f s  $nt%4d t  $tt%6.1f tt  ${nm.take(100)}")
+    }
+    out.toString
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Materialize a k×-scaled copy of a driver testdata dir for the scaling
@@ -30,13 +30,7 @@ object ScaleUp {
     val Array(src, dst, fs) = args
     val k = fs.toInt
     require(k >= 1, s"factor must be >= 1, got $k")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     def write(df: DataFrame, name: String): Unit =
       df.write.mode(SaveMode.Overwrite).parquet(s"$dst/$name.parquet")

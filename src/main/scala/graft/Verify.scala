@@ -37,35 +37,7 @@ object Verify {
       case Array(s, o) => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // in-process permission ops for file:// — without the hadoop native
-      // lib, stock RawLocalFileSystem FORKS `chmod` once per created
-      // dir/file (measured: thousands of ~10 ms forks per many-file staged
-      // write); same permission bits via java.nio, no subprocess
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .withExtensions(new graft.functions.GraftExtensions)
-    // Opt-in A/B hook (same syntax as BenchOne): SPARK_GRAFT_CONF="k=v;k=v"
-    // overrides session configs — lets one oracle drive run under the BENCH
-    // session regime (AQE coalescing floor / Tungsten shuffle writer /
-    // cached-plan repartitioning), cross-checking that those configs are
-    // semantics-neutral. Unset (the driver's gate), behavior is IDENTICAL
-    // to before: defaults only.
-    val spark = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';').toSeq).filter(_.contains('='))
-      .foldLeft(builder0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

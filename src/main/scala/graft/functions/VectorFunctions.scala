@@ -24,12 +24,6 @@ object VectorFunctions {
   /** Cosine similarity in double precision. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
-  /** Squared euclidean distance. */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double"); d * d
-    }), lit(0.0), (acc, v) => acc + v)
-
   /** Sign bit pattern of `planes` pseudo-random hyperplane projections —
     * the bucket id for random-hyperplane LSH. Plane coefficients are a
     * deterministic hash of (plane, dim), so executors regenerate them

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -126,10 +126,10 @@ object Curation {
    * `budgets` are dropped entirely (explicit mix).
    *
    * The per-source running sum uses the same distributed-scan shape as
-   * [[packTokenShards]] — range-partition by (source, order), per-(bucket,
+   * [[packTokenShards]] — [[keyRanges]] over the shuffle order, per-(range,
    * source) totals to the driver (metadata-sized), window only WITHIN each
-   * bucket — so no source ever funnels through a single reducer: a 100 TB
-   * web-heavy mix scans in parallel across the web source's buckets.
+   * (range, source) — so no source ever funnels through a single reducer:
+   * a 100 TB web-heavy mix scans in parallel across every range.
    */
   def mixTokenBudget(docs: DataFrame, tokenCol: Column,
       budgets: Map[String, Long], sourceCol: String = "source",
@@ -137,18 +137,14 @@ object Curation {
     require(budgets.nonEmpty, "at least one source budget required")
     require(budgets.values.forall(_ >= 0), "budgets must be >= 0")
     val spark = docs.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.sessionState.conf.numShufflePartitions
     import spark.implicits._
     val budgetDf = budgets.toSeq.toDF(sourceCol, "_budget")
-    val ordered = docs.join(broadcast(budgetDf), Seq(sourceCol))
-      .withColumn("_tokens", tokenCol.cast("long"))
-      .withColumn("_ord", md5(col(idCol).cast("string")))
-      .repartitionByRange(parts, col(sourceCol), col("_ord"))
-      .withColumn("_pid", spark_partition_id())
-    val totals = ordered.groupBy(col("_pid"), col(sourceCol))
-      .agg(sum("_tokens").as("t"))
-      .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+    val (ordered, stats) = keyRanges(
+      docs.join(broadcast(budgetDf), Seq(sourceCol))
+        .withColumn("_tokens", tokenCol.cast("long"))
+        .withColumn("_ord", md5(col(idCol).cast("string"))),
+      "_ord", Seq(sourceCol), numPartitions)
+    val totals = stats.map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
     val offsetRows = totals.keys.groupBy(_._2).toSeq.flatMap { case (s, keys) =>
       val pids = keys.map(_._1).toSeq.sorted
       val offs = pids.scanLeft(0L)((acc, p) => acc + totals((p, s)))
@@ -166,37 +162,59 @@ object Curation {
   }
 
   /**
+   * `df` with `_pid`, the contiguous ascending range of `key` each row
+   * falls in (at most `numPartitions` ranges; 0 = the shuffle partitions),
+   * and the rows (`_pid`, `groups`…, sum of `_tokens`, …) with the total
+   * per range and group: the driver-side half of a distributed prefix sum.
+   *
+   * ONE repartitionByRange pass cuts and sums the ranges; `_pid` is then
+   * re-derived from each range's lowest key, never by a second range
+   * exchange: RangePartitioner seeds its sample with the RDD id, so two
+   * exchanges over the same input cut different boundaries once an input
+   * partition outgrows the sample, and the totals would describe other
+   * ranges than the rows land in. Nulls sort first, into the first range.
+   */
+  private def keyRanges(df: DataFrame, key: String, groups: Seq[String],
+      numPartitions: Int): (DataFrame, Seq[Row]) = {
+    val parts = if (numPartitions > 0) numPartitions
+                else df.sparkSession.sessionState.conf.numShufflePartitions
+    val stats = df.select((key +: "_tokens" +: groups).map(col): _*)
+      .repartitionByRange(parts, col(key))
+      .groupBy(spark_partition_id().as("_pid") +: groups.map(col): _*)
+      .agg(sum("_tokens"), min(key).as("_min"))
+      .withColumn("_floor", min("_min").over(Window.partitionBy("_pid")))
+      .collect().toSeq
+    val floors = stats.map(r => r.getInt(0) -> r.getAs[Any]("_floor"))
+      .distinct.sortBy(_._1)
+    val pid = floors.drop(1).foldLeft(lit(floors.headOption.fold(0)(_._1))) {
+      case (acc, (p, floor)) => when(col(key) >= lit(floor), p).otherwise(acc)
+    }
+    (df.withColumn("_pid", pid), stats)
+  }
+
+  /**
    * Token-budget shard packing: assign each document to a training shard of
    * ~`budget` tokens, preserving `orderCol` order (shard s = docs whose
    * cumulative token start offset lands in [s·budget, (s+1)·budget)).
    *
    * The global prefix sum is computed WITHOUT a single-partition window —
-   * the classic distributed scan: range-partition by `orderCol`, sum each
-   * partition (tiny per-partition totals to the driver), turn them into
-   * per-partition start offsets, then window only WITHIN each partition
-   * (parallel, no global sort/shuffle to one reducer). Results are
-   * identical to a global running sum for any partition boundaries, since
-   * range partitions are contiguous in `orderCol`.
+   * the classic distributed scan: [[keyRanges]] cuts `orderCol` into
+   * contiguous ranges and sums each (tiny per-range totals to the driver),
+   * the totals become per-range start offsets, then the window runs only
+   * WITHIN each range (parallel, no global sort/shuffle to one reducer).
+   * Results are identical to a global running sum for any range
+   * boundaries.
    */
   def packTokenShards(df: DataFrame, tokenCol: Column, budget: Long,
       orderCol: String, numPartitions: Int = 0): DataFrame = {
     require(budget > 0, "shard token budget must be positive")
     val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.sessionState.conf.numShufflePartitions
-    val ranged = df.withColumn("_tokens", tokenCol.cast("long"))
-      .repartitionByRange(parts, col(orderCol))
-      .withColumn("_pid", spark_partition_id())
-    // per-partition totals: `parts` rows to the driver, a metadata read.
-    // (This job and the final one re-derive the same range boundaries —
-    // RangePartitioner's sampling is deterministic for a fixed lineage —
-    // at the cost of planning the input twice; persist upstream if it is
-    // expensive to recompute.)
-    val totals = ranged.groupBy("_pid").agg(sum("_tokens").as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until parts).scanLeft(0L)((acc, p) => acc + totals.getOrElse(p, 0L))
+    val (ranged, stats) = keyRanges(
+      df.withColumn("_tokens", tokenCol.cast("long")), orderCol, Nil, numPartitions)
+    val totals = stats.map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val offsets = totals.scanLeft(0L)((acc, t) => acc + t._2)
     import spark.implicits._
-    val offsetDf = (0 until parts).map(p => (p, offsets(p))).toDF("_pid", "_offset")
+    val offsetDf = totals.map(_._1).zip(offsets).toDF("_pid", "_offset")
     val w = Window.partitionBy(col("_pid")).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ranged.join(broadcast(offsetDf), Seq("_pid"))

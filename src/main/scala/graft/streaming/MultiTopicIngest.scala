@@ -115,9 +115,6 @@ class MultiTopicIngest(lanes: Seq[IngestLane],
     else Some(ConcurrentLanes.newPool(
       math.min(parallelism, lanes.size), "multitopic"))
 
-  /** The per-lane ingest loops (tests drain their service futures). */
-  def lanesRunning: Seq[ContinuousIngest] = ingests
-
   /** One round-robin sweep: step every lane once — concurrently when
     * `parallelism > 1`. Returns the number of lanes that ingested a batch
     * (0 = all dry). */

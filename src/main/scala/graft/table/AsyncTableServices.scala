@@ -6,11 +6,11 @@ import scala.concurrent.{ExecutionContext, Future}
 /**
  * Asynchronous table services (ref: hudi-client-common
  * .../async/HoodieAsyncService.java + AsyncCompactService /
- * AsyncClusteringService): run compaction, clustering, cleaning and
- * archival off the ingest path on a background pool.
+ * AsyncClusteringService): run compaction, cleaning and archival off the
+ * ingest path on a background pool.
  *
- * Safety: compaction and clustering commit through the same commit-time
- * lock + conflict detection as any writer, so one that loses a race with
+ * Safety: compaction commits through the same commit-time lock +
+ * conflict detection as any writer, so a compaction that loses a race with
  * concurrent ingest fails with ConcurrentWriteException and can simply be
  * rescheduled — ingest never waits on a service and vice versa, exactly
  * the reference's async-compaction contract. Cleaning and archival
@@ -29,10 +29,6 @@ class AsyncTableServices(t: GraftTable, threads: Int = 2) extends AutoCloseable 
 
   def compactAsync(partitionPred: String => Boolean = _ => true): Future[Option[String]] =
     Future(t.compact(partitionPred))
-
-  def clusterAsync(sortCols: Seq[String], zorder: Boolean = false,
-      partitionPred: String => Boolean = _ => true): Future[Option[String]] =
-    Future(t.cluster(sortCols, zorder, partitionPred))
 
   def cleanAsync(retainVersions: Int = 1): Future[String] =
     Future(t.clean(retainVersions))

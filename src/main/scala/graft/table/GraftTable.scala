@@ -1932,6 +1932,11 @@ class GraftTable(val spark: SparkSession, val basePath: String, val config: Tabl
       // batch row count rides into the commit metadata (stats_wa write
       // amplification) — every branch already collects it, no extra job
       var batchRows = 0L
+      // partitions of delete rows that matched no live key: that verdict
+      // was reached against this write's start view, so a racing commit
+      // that inserted one of those keys must conflict, or the delete would
+      // land as a no-op after the insert it follows in commit order
+      var missedDeleteParts = Set.empty[String]
       val (out, logGroups, touched, packedLogGroups) =
         if (globalSort) {
           // GLOBAL_SORT layout: one range shuffle on (partition, key) slices
@@ -1992,6 +1997,8 @@ class GraftTable(val spark: SparkSession, val basePath: String, val config: Tabl
             .map(r => (r.getString(0), Option(r.getString(1)), r.getBoolean(2),
               r.getLong(3)))
           batchRows = groupCounts.map(_._4).sum
+          missedDeleteParts =
+            groupCounts.collect { case (p, None, true, _) => p }.toSet
           val insertCounts =
             groupCounts.collect { case (p, None, false, n) => p -> n }
               .groupMapReduce(_._1)(_._2)(_ + _)
@@ -2067,8 +2074,8 @@ class GraftTable(val spark: SparkSession, val basePath: String, val config: Tabl
       // passing the duplicate probe and both committing. Partition-level
       // conflict forces the loser to re-probe (free: the partitions come
       // from the files this write just staged).
-      val confParts = if (conflictOnPartitions) files.map(_.partition).toSet
-                      else Set.empty[String]
+      val confParts = missedDeleteParts ++
+        (if (conflictOnPartitions) files.map(_.partition).toSet else Nil)
       commitGuarded(startSeen, touched ++ written, confParts,
         CommitMeta(instant, action, op,
           schemaJson = merged.json, files = files,

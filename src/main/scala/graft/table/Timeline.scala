@@ -268,12 +268,6 @@ class Timeline(baseDir: String) {
       .filter(_.endsWith(".json")).map(_.split('.')(0)).sorted
   }
 
-  /** One archived instant's full meta, any action (targeted lookup — the
-    * metadata-table sync replays archive-before-sync commits from here
-    * without loading the whole cold archive). */
-  def archivedMeta(instant: String): Option[CommitMeta] =
-    archivedMetaBatch(Set(instant)).headOption
-
   /** Batch lookup of archived metas: ONE directory listing however many
     * instants are requested — the archive can hold every instant the
     * table ever completed, so per-instant listings would be O(n²) in the

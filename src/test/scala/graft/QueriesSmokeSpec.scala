@@ -4,22 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // in-process permission ops for file:// — without the hadoop native
-    // lib, stock RawLocalFileSystem FORKS `chmod` once per created
-    // dir/file; same permission bits via java.nio, no subprocess
-    .config("spark.hadoop.fs.file.impl",
-      classOf[graft.sources.NioLocalFileSystem].getName)
-    .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
-    .config("spark.sql.catalog.graft.warehouse",
-      s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.start(cores = 4)
   val sf = "/root/testdata/sf0.001"
 }
 
@@ -41,6 +26,14 @@ class QueriesSmokeSpec extends AnyFunSuite {
       "bpe_train", "bpe_encode")
     assert(noOracle.subsetOf(rowsOnly), s"missing oracle for: $noOracle")
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("ProfileOne reports the plan and the labelled jobs of a lake query") {
+    val report = ProfileOne.report(spark, "lake_upsert_snapshot", sf)
+    val jobs = report.linesIterator.filter(_.trim.startsWith("job ")).toSeq
+    assert(report.contains("== Physical Plan =="), report)
+    assert(jobs.nonEmpty, report)
+    assert(jobs.exists(_.contains("graft:")), report)
   }
 
   for ((name, fn) <- SparkEntry.queries) {

@@ -97,21 +97,46 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("packTokenShards equals a global running-sum assignment across partitions") {
-    val rows = (1 to 40).map(i => (i.toLong, s"doc $i", (i % 7 + 1) * 3L))
-    val df = rows.toDF("doc_id", "text", "n")
-    val packed = Curation.packTokenShards(df, col("n"), budget = 20L,
-      orderCol = "doc_id", numPartitions = 5)
-      .select("doc_id", "tokens", "shard")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    // reference: sequential scan on the driver
-    var cum = 0L
-    val expected = rows.sortBy(_._1).map { case (id, _, n) =>
-      val start = cum; cum += n; (id, n, start / 20L)
+    // 20000 rows: every input partition outgrows the range sampler, so two
+    // range exchanges over this input would cut different boundaries
+    for (n <- Seq(40, 20000)) {
+      val rows = (1 to n).map(i => (i.toLong, s"doc $i", (i % 7 + 1) * 3L))
+      val df = rows.toDF("doc_id", "text", "n")
+      val packed = Curation.packTokenShards(df, col("n"), budget = 20L,
+        orderCol = "doc_id", numPartitions = 5)
+        .select("doc_id", "tokens", "shard")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+      // reference: sequential scan on the driver
+      var cum = 0L
+      val expected = rows.sortBy(_._1).map { case (id, _, n) =>
+        val start = cum; cum += n; (id, n, start / 20L)
+      }
+      val wrong = packed.zip(expected).count { case (g, w) => g != w }
+      assert(packed.length == n && wrong == 0, s"$n rows: $wrong misassigned")
+      // shards are contiguous and every shard except the last crosses budget
+      val perShard = expected.groupBy(_._3).toSeq.sortBy(_._1)
+      assert(perShard.map(_._1) === perShard.indices.map(_.toLong))
     }
-    assert(packed.toSeq === expected)
-    // shards are contiguous and every shard except the last crosses budget
-    val perShard = expected.groupBy(_._3).toSeq.sortBy(_._1)
-    assert(perShard.map(_._1) === perShard.indices.map(_.toLong))
+  }
+
+  test("mixTokenBudget keeps each source's md5-ordered prefix within its budget") {
+    val rows = (1 to 20000).map(i =>
+      (i.toLong, if (i % 3 == 0) "wiki" else "web", (i % 7 + 1).toLong))
+    val budgets = Map("web" -> 30000L, "wiki" -> 20000L)
+    val kept = Curation.mixTokenBudget(rows.toDF("doc_id", "source", "n"),
+      col("n"), budgets, numPartitions = 5)
+      .select("doc_id").as[Long].collect().sorted
+    def md5(s: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // reference: per-source sequential scan on the driver
+    val expected = rows.groupBy(_._2).toSeq.flatMap { case (src, rs) =>
+      var cum = 0L
+      rs.sortBy(r => (md5(r._1.toString), r._1))
+        .filter { r => cum += r._3; cum <= budgets(src) }.map(_._1)
+    }.sorted
+    assert(kept.sameElements(expected),
+      s"kept ${kept.length} docs, expected ${expected.length}: " +
+        s"${kept.diff(expected).take(5).mkString(",")} / ${expected.diff(kept).take(5).mkString(",")}")
   }
 
   test("packTokenShards: a document larger than the budget gets its own start shard") {
